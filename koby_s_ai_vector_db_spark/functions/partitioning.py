@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 # The ``df.rdd.getNumPartitions()`` probe costs ~45 ms of driver work per
 # call (it plans the RDD lineage through py4j), and the registry rebuilds
@@ -59,10 +59,7 @@ def spread(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
         bkey = (sc.applicationId, df._jdf.semanticHash(), "bytes")
         nbytes = _WIDTH_MEMO.get(bkey)
         if nbytes is None:
-            nbytes = _total_bytes(
-                f[len("file:"):] if f.startswith("file:") else f
-                for f in df.inputFiles()
-            )
+            nbytes = _total_bytes(df.inputFiles())
             _WIDTH_MEMO[bkey] = nbytes
         if nbytes:  # non-file-backed frames keep the full fan-out
             target = min(target, max(1, nbytes // bytes_per_task))
@@ -94,15 +91,25 @@ def input_sized_partitions(
     the co-partitioning guarantee is the point.
 
     The probe is driver-side os.stat/os.walk only — no Spark job, so
-    query construction stays action-free. Missing paths count 0 bytes
-    (the subsequent scan will fail loudly on its own)."""
-    return max(1, _total_bytes(paths) // bytes_per_partition)
+    query construction stays action-free. Missing paths and non-local
+    URIs (hdfs://, s3a://) count 0 bytes; when nothing is measurable the
+    count falls back to the active session's spark.sql.shuffle.partitions
+    rather than 1, so an unmeasured input can never pin a keyed cache to
+    one partition."""
+    total = _total_bytes(paths)
+    if total == 0:
+        return int(SparkSession.active().conf.get("spark.sql.shuffle.partitions"))
+    return max(1, total // bytes_per_partition)
 
 
 def _total_bytes(paths) -> int:
-    """Driver-side on-disk byte total over files/directories (no job)."""
+    """Driver-side on-disk byte total over files/directories (no job).
+    Accepts bare paths and the `file:` URIs `DataFrame.inputFiles()`
+    returns."""
     total = 0
     for p in paths:
+        if p.startswith("file:"):
+            p = p[len("file:"):]
         if os.path.isdir(p):
             for root, _dirs, files in os.walk(p):
                 total += sum(

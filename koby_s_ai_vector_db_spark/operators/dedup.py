@@ -12,13 +12,17 @@ Every operator here follows the same shape:
 
   1. per-row signature, map-only, JVM-side (md5-based portable hashes so
      the DuckDB oracle computes bit-identical values — functions/hashing.py)
-  2. candidate generation by *blocking*: rows sharing an LSH band bucket
-     (MinHash) or a signature byte-block (SimHash) — shuffle keyed on the
-     bucket, bucket sizes bounded w.h.p., and high-entropy bucket
-     families capped at BUCKET_CAP (chain fallback) so even adversarial
-     identical-content floods stay O(N).
+  2. candidate generation by *blocking*. The LSH band tiers (MinHash
+     bands via `_minhash_bands`, hyperplane bands) share ONE primitive,
+     `bucket_candidates`: shuffle keyed on the (band_id, band_key)
+     bucket, bucket sizes bounded w.h.p., and buckets above BUCKET_CAP
+     emit the sorted chain so even adversarial identical-content floods
+     stay O(N). SimHash keys pairs of signature blocks in
+     `_simhash_rep_pairs` — a streaming self-join with no cap, because a
+     cap would break its pigeonhole completeness.
   3. exact verification ONLY on candidate pairs (Jaccard over shingle
-     sets / Hamming distance), a join bounded by candidate count.
+     sets / cosine via the shared `_verify_pairs` tail; Hamming distance
+     for SimHash), a join bounded by candidate count.
   4. pair → group promotion by large-star/small-star contraction
      (near_dup_groups): O(log n) rounds independent of component
      diameter, per-round lineage truncation, loud failure over silently
@@ -177,6 +181,18 @@ def band_keys_expr(sig_col: str) -> Column:
     )
 
 
+def _minhash_bands(grams: DataFrame) -> DataFrame:
+    """(_id, band_id, band_key) rows from an (_id, g) shingle table:
+    shingle hashes → MinHash signature → BANDS band keys. The DuckDB twin
+    is queries/dedup_q.py::_minhash_band_ctes."""
+    sigs = grams.withColumn("_h", shingle_hashes_expr("g")).withColumn(
+        "sig", minhash_sig_expr("_h")
+    )
+    return sigs.select(
+        "_id", F.posexplode(band_keys_expr("sig")).alias("band_id", "band_key")
+    )
+
+
 # LSH bucket-size cap: a bucket holding N rows explodes into N(N-1)/2
 # candidate pairs — quadratic in the one place LSH is supposed to avoid
 # quadratics. Oversized buckets are near-always identical/boilerplate text
@@ -207,10 +223,56 @@ def capped_bucket_pairs_expr(ids: str, cap: int = BUCKET_CAP) -> Column:
     return F.expr(f"IF(size({ids}) <= {cap}, {all_pairs}, {chain})")
 
 
+def bucket_candidates(bands: DataFrame, cap: int = BUCKET_CAP) -> DataFrame:
+    """Distinct candidate pairs (ai, bi), ai < bi, from (_id, band_id,
+    band_key) rows — the one candidate-pair primitive of the LSH tiers
+    (MinHash bands, hyperplane bands). Rows sharing a (band_id, band_key)
+    bucket pair up under the `capped_bucket_pairs_expr` rule.
+
+    One shuffle: group by bucket, then explode the in-bucket pairs from
+    the sorted id list. A bucket self-join computes the same set but
+    exchanges and sorts the bands table twice; at fixture scale the two
+    are within measurement noise (first-run cost is dominated by plan
+    compilation), the single exchange is the scale argument. The DuckDB
+    twin is queries/dedup_q.py::_capped_cand_cte."""
+    return (
+        bands.groupBy("band_id", "band_key")
+        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select(F.explode(capped_bucket_pairs_expr("ids", cap)).alias("p"))
+        .select("p.ai", "p.bi")
+        .distinct()
+    )
+
+
 def jaccard(a: str, b: str) -> Column:
     """Exact Jaccard over two (distinct-element) array columns."""
     return F.size(F.array_intersect(F.col(a), F.col(b))).cast("double") / F.size(
         F.array_union(F.col(a), F.col(b))
+    )
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    side_a: DataFrame,
+    side_b: DataFrame,
+    col: str,
+    score,
+    threshold: float,
+) -> DataFrame:
+    """The verify tail every LSH tier shares: candidate pairs (ai, bi)
+    join side a's then side b's `col` payload (both sides keyed `_id`),
+    `score(xa, xb)` scores each pair, and pairs below `threshold` drop.
+    Returns (ai, bi, score). Callers choose the candidate side's join
+    strategy (a broadcast hint or not) before passing `cand`."""
+    xa = side_a.select(F.col("_id").alias("ai"), F.col(col).alias("xa"))
+    xb = side_b.select(F.col("_id").alias("bi"), F.col(col).alias("xb"))
+    return (
+        cand.join(xa, "ai")
+        .join(xb, "bi")
+        .withColumn("score", score("xa", "xb"))
+        .filter(F.col("score") >= threshold)
+        .select("ai", "bi", "score")
     )
 
 
@@ -240,7 +302,7 @@ def _shingle_table(
     the result is persisted ONCE per (session, key) and shared by every
     shingle consumer (MinHash signatures, n-gram Jaccard postings) — the
     in-session analogue of a materialized signature table. Without a key,
-    `persist_uncached` governs a per-call persist: MinHash needs it (four
+    `persist_uncached` governs a per-call persist: MinHash needs it (three
     consumers in one DAG); single-consumer callers skip it."""
     from pyspark import StorageLevel
 
@@ -280,52 +342,26 @@ def minhash_near_dup_pairs(
     calls AND across operators in the same session — the pair query, the
     groups query, and the n-gram Jaccard query all read one copy.
     """
-    # Signatures are computed ONCE and reused by four consumers (both sides
-    # of the band self-join, both arms of the pair verify). At cluster
+    # Shingles are computed ONCE and read by three consumers (the band
+    # build and both arms of the pair verify). At cluster
     # scale this is a materialized signature table (write once, read per
     # stage); in-session the analogue is the persisted/memoized
     # _shingle_table — without it the shingle+md5 pipeline re-executes
     # per branch.
     grams = _shingle_table(docs, id_col, text_col, cache_key)
-    sigs = grams.withColumn("_h", shingle_hashes_expr("g")).withColumn(
-        "sig", minhash_sig_expr("_h")
-    )
-    bands = sigs.select(
-        "_id", F.posexplode(band_keys_expr("sig")).alias("band_id", "band_key")
-    )
-    # Candidate pairs come from a single shuffle: group by bucket, then
-    # explode the in-bucket pairs from the sorted id list (ai < bi by
-    # construction). A bucket self-join computes the same set but
-    # exchanges + sorts the bands table twice; at fixture scale the two
-    # are within measurement noise (first-run cost is dominated by plan
-    # compilation), the single exchange is the scale argument.
-    # Buckets above BUCKET_CAP emit the consecutive chain instead of all
-    # pairs — see the cap rationale above `capped_bucket_pairs_expr`.
-    buckets = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    cand = (
-        buckets.select(F.explode(capped_bucket_pairs_expr("ids")).alias("p"))
-        .select("p.ai", "p.bi")
-        .distinct()
-    )
-    ga = grams.select(F.col("_id").alias("ai"), F.col("g").alias("ga"))
-    gb = grams.select(F.col("_id").alias("bi"), F.col("g").alias("gb"))
     # cand is tiny relative to the corpus (bounded by true near-dup pairs +
     # LSH false positives) — broadcast it so the gram arrays never shuffle.
-    out = (
-        F.broadcast(cand)
-        .join(ga, "ai")
-        .join(gb, "bi")
-        .withColumn("jaccard", jaccard("ga", "gb"))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("ai").alias("doc_id_a"),
-            F.col("bi").alias("doc_id_b"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
+    out = _verify_pairs(
+        F.broadcast(bucket_candidates(_minhash_bands(grams))),
+        grams,
+        grams,
+        "g",
+        jaccard,
+        threshold,
+    ).select(
+        F.col("ai").alias("doc_id_a"),
+        F.col("bi").alias("doc_id_b"),
+        F.round("score", 6).alias("jaccard"),
     )
     if cache_key is None:
         return out
@@ -589,7 +625,7 @@ def _simhash_rep_pairs(
                 )
             ).alias("block_id", "block_val"),
         )
-    # Unlike the MinHash path's collect_list + array-explode buckets, pair
+    # Unlike `bucket_candidates` (collect_list + array-explode buckets), pair
     # generation here is a streaming SELF-JOIN on the block key: a
     # narrow-vocabulary corpus crowds thousands of DISTINCT sketches into
     # one 15-bit block value, and a collect_list bucket would materialize
@@ -604,7 +640,7 @@ def _simhash_rep_pairs(
     # max_hamming shares a block). The scale knobs for SimHash are key
     # ENTROPY (bits / block_bits above) and the distinct-sketch collapse —
     # whereas MinHash bands and hyperplane sketches already have
-    # high-entropy keys and get the cap (capped_bucket_pairs_expr).
+    # high-entropy keys and get the cap (bucket_candidates).
     a, b = blocks.alias("a"), blocks.alias("b")
     return (
         a.join(
@@ -761,29 +797,12 @@ def hyperplane_lsh_pairs(
             )
         ).alias("band_id", "band_key"),
     )
-    buckets = (
-        bands.groupBy("band_id", "band_key")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    cand = (
-        buckets.select(F.explode(capped_bucket_pairs_expr("ids")).alias("p"))
-        .select("p.ai", "p.bi")
-        .distinct()
-    )
-    va = c.select(F.col("_id").alias("ai"), F.col("v").alias("va"))
-    vb = c.select(F.col("_id").alias("bi"), F.col("v").alias("vb"))
-    return (
-        F.broadcast(cand)
-        .join(va, "ai")
-        .join(vb, "bi")
-        .withColumn("sim", dot("va", "vb"))
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("ai").alias("vec_id_a"),
-            F.col("bi").alias("vec_id_b"),
-            F.round("sim", round_to).alias("sim"),
-        )
+    return _verify_pairs(
+        F.broadcast(bucket_candidates(bands)), c, c, "v", dot, threshold
+    ).select(
+        F.col("ai").alias("vec_id_a"),
+        F.col("bi").alias("vec_id_b"),
+        F.round("score", round_to).alias("sim"),
     )
 
 
@@ -952,17 +971,9 @@ def incremental_minhash_dedup(
         persist_uncached=cache_key is None,
     )
 
-    def _bands(grams: DataFrame) -> DataFrame:
-        sigs = grams.withColumn("_h", shingle_hashes_expr("g")).withColumn(
-            "sig", minhash_sig_expr("_h")
-        )
-        return sigs.select(
-            "_id", F.posexplode(band_keys_expr("sig")).alias("band_id", "band_key")
-        )
-
     def _base_members() -> DataFrame:
         return (
-            _bands(bg)
+            _minhash_bands(bg)
             .groupBy("band_id", "band_key")
             .agg(
                 F.slice(
@@ -990,24 +1001,20 @@ def incremental_minhash_dedup(
     else:
         base_members = _base_members()
     cand = (
-        _bands(ng)
+        _minhash_bands(ng)
         .join(base_members, ["band_id", "band_key"])
-        .select(F.col("_id").alias("new_id"), F.explode("ids").alias("base_id"))
+        .select(F.col("_id").alias("ai"), F.explode("ids").alias("bi"))
         .distinct()
     )
-    ga = ng.select(F.col("_id").alias("new_id"), F.col("g").alias("ga"))
-    gb = bg.select(F.col("_id").alias("base_id"), F.col("g").alias("gb"))
     # No broadcast hint on cand: its size scales with new-batch band
     # collisions (up to batch_bands x BUCKET_CAP) and can exceed the
     # broadcast limit for the large daily batches this operator targets.
     # AQE sees the materialized candidate size at runtime and picks
     # broadcast itself whenever cand is actually small (ADVICE r06).
-    ver = (
-        cand
-        .join(ga, "new_id")
-        .join(gb, "base_id")
-        .withColumn("jac", jaccard("ga", "gb"))
-        .filter(F.col("jac") >= threshold)
+    ver = _verify_pairs(cand, ng, bg, "g", jaccard, threshold).select(
+        F.col("ai").alias("new_id"),
+        F.col("bi").alias("base_id"),
+        F.col("score").alias("jac"),
     )
     w = Window.partitionBy("new_id").orderBy(F.desc("jac"), F.asc("base_id"))
     best = (

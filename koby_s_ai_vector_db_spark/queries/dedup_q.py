@@ -84,19 +84,102 @@ def _emb_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(EMB_DD_SPARK)
 
 
-# Shared DuckDB CTE: docs_dd → words → distinct 3-gram shingles.
-_GRAMS_CTE = f"""
-WITH docs_dd AS ({DOCS_DD_SQL}),
-words AS (
+# DuckDB CTE generators. Each renders one chain the Spark side builds in
+# operators/dedup.py, from the same constants; `p` prefixes every CTE name
+# so two chains can share one WITH clause.
+
+
+def _words_cte(rel: str, p: str = "") -> str:
+    """`{p}words(doc_id, w)`: lowercased whitespace tokens, empties
+    dropped — the twin of operators/dedup.py::words_expr."""
+    return f"""{p}words AS (
     SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-    FROM docs_dd
-),
-grams AS (
+    FROM {rel}
+)"""
+
+
+def _grams_ctes(rel: str, p: str = "") -> str:
+    """`{p}words`, `{p}grams(doc_id, g)`: distinct word 3-gram shingles of
+    docs with at least 3 words — the twin of dedup.py::_shingle_table."""
+    return f"""{_words_cte(rel, p)},
+{p}grams AS (
     SELECT doc_id,
            list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
                           for i in range(1, len(w) - 1)]) AS g
-    FROM words WHERE len(w) >= 3
+    FROM {p}words WHERE len(w) >= 3
 )"""
+
+
+def _minhash_band_ctes(rel: str, p: str = "") -> str:
+    """The grams → shingle hashes → signature → bands chain, ending in
+    `{p}bands(doc_id, j, band_key)` — the twin of
+    dedup.py::_minhash_bands over _shingle_table."""
+    band_key = " || ',' || ".join(
+        f"CAST(sig[j * {ROWS} + {i + 1}] AS VARCHAR)" for i in range(ROWS)
+    )
+    return f"""{_grams_ctes(rel, p)},
+{p}hs AS (
+    SELECT doc_id, g,
+           list_transform(g, x -> (('0x' || substr(md5(x), 1, 8))::BIGINT) % {P}) AS h
+    FROM {p}grams
+),
+{p}sigs AS (SELECT doc_id, g, {_SIG_DUCK} AS sig FROM {p}hs),
+{p}bands AS (
+    SELECT doc_id, j, {band_key} AS band_key
+    FROM {p}sigs CROSS JOIN (SELECT unnest(range(0, {BANDS})) AS j) _j
+)"""
+
+
+def _capped_cand_cte(
+    rel: str, id_col: str, band_cols: tuple[str, str], cap: int = BUCKET_CAP
+) -> str:
+    """`bsz`, `cand(ai, bi)`: the twin of dedup.py::bucket_candidates over
+    rel(id_col, *band_cols). Buckets up to `cap` emit all pairs,
+    oversized buckets the consecutive sorted chain."""
+    cols = ", ".join(band_cols)
+    same = " AND ".join(f"a.{c} = b.{c}" for c in band_cols)
+    sized = " AND ".join(f"s.{c} = a.{c}" for c in band_cols)
+    return f"""bsz AS (SELECT {cols}, count(*) AS n FROM {rel} GROUP BY {cols}),
+cand AS (
+    SELECT DISTINCT ai, bi FROM (
+        SELECT a.{id_col} AS ai, b.{id_col} AS bi
+        FROM {rel} a JOIN {rel} b
+          ON {same} AND a.{id_col} < b.{id_col}
+        JOIN bsz s ON {sized}
+        WHERE s.n <= {cap}
+        UNION ALL
+        SELECT ids[i] AS ai, ids[i+1] AS bi
+        FROM (SELECT {cols}, list({id_col} ORDER BY {id_col}) AS ids
+              FROM {rel} GROUP BY {cols} HAVING count(*) > {cap}) ob,
+             unnest(range(1, len(ids))) AS t(i)
+    ) u(ai, bi)
+)"""
+
+
+def _simhash_ctes(bits: int) -> str:
+    """`docs_dd` → `words` → `tok` → `bits` → `sh(doc_id, sh)`: the
+    per-token md5 hash (first bits/4 hex chars), majority bit-vote and
+    sign-pack of dedup.py::simhash_table. Docs with no tokens get no row."""
+    return f"""WITH docs_dd AS ({DOCS_DD_SQL}),
+{_words_cte("docs_dd")},
+tok AS (
+    SELECT doc_id, unnest(list_transform(w, t -> ('0x' || substr(md5(t), 1, {bits // 4}))::BIGINT)) AS h
+    FROM words WHERE len(w) > 0
+),
+bits AS (
+    SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
+    FROM tok CROSS JOIN (SELECT unnest(range(0, {bits})) AS b) _b
+    GROUP BY doc_id, b
+),
+sh AS (
+    SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh
+    FROM bits GROUP BY doc_id
+)"""
+
+
+_SIG_DUCK = "[" + ", ".join(
+    f"list_min(list_transform(h, x -> ({a} * x + {b}) % {P}))" for a, b in HASH_PARAMS
+) + "]"
 
 _JACCARD = (
     "len(list_intersect({a}, {b}))::DOUBLE / len(list_distinct(list_concat({a}, {b})))"
@@ -139,24 +222,7 @@ def dedup_exact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_simhash oracle uses, grouped into the (sketch, canonical, count)
 # state table instead of joined into pairs.
 _SKETCH_STREAM_ORACLE = f"""
-WITH docs_dd AS ({DOCS_DD_SQL}),
-words AS (
-    SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-    FROM docs_dd
-),
-tok AS (
-    SELECT doc_id, unnest(list_transform(w, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT)) AS h
-    FROM words WHERE len(w) > 0
-),
-bits AS (
-    SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-    FROM tok CROSS JOIN (SELECT unnest(range(0, 32)) AS b) _b
-    GROUP BY doc_id, b
-),
-sh AS (
-    SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh
-    FROM bits GROUP BY doc_id
-)
+{_simhash_ctes(32)}
 SELECT sh AS sketch, min(doc_id) AS canonical_id, count(*) AS n_copies
 FROM sh GROUP BY sh
 """
@@ -173,41 +239,10 @@ def dedup_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_sketch_dedup(_docs_dd(spark, sf_dir))
 
 
-_SIG_DUCK = "[" + ", ".join(
-    f"list_min(list_transform(h, x -> ({a} * x + {b}) % {P}))" for a, b in HASH_PARAMS
-) + "]"
-
-_MINHASH_ORACLE = _GRAMS_CTE + f"""
-, hs AS (
-    SELECT doc_id, g,
-           list_transform(g, x -> (('0x' || substr(md5(x), 1, 8))::BIGINT) % {P}) AS h
-    FROM grams
-),
-sigs AS (SELECT doc_id, {_SIG_DUCK} AS sig FROM hs),
-bands AS (
-    SELECT doc_id, j,
-           CAST(sig[j * {ROWS} + 1] AS VARCHAR) || ',' ||
-           CAST(sig[j * {ROWS} + 2] AS VARCHAR) || ',' ||
-           CAST(sig[j * {ROWS} + 3] AS VARCHAR) AS band_key
-    FROM sigs CROSS JOIN (SELECT unnest(range(0, {BANDS})) AS j) _j
-),
-bsz AS (SELECT j, band_key, count(*) AS n FROM bands GROUP BY j, band_key),
--- Mirrors the Spark BUCKET_CAP rule (operators/dedup.py): buckets up to
--- the cap emit all pairs, oversized buckets the consecutive sorted chain.
-cand AS (
-    SELECT DISTINCT ai, bi FROM (
-        SELECT a.doc_id AS ai, b.doc_id AS bi
-        FROM bands a JOIN bands b
-          ON a.j = b.j AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-        JOIN bsz s ON s.j = a.j AND s.band_key = a.band_key
-        WHERE s.n <= {BUCKET_CAP}
-        UNION ALL
-        SELECT ids[i] AS ai, ids[i+1] AS bi
-        FROM (SELECT j, band_key, list(doc_id ORDER BY doc_id) AS ids
-              FROM bands GROUP BY j, band_key HAVING count(*) > {BUCKET_CAP}) ob,
-             unnest(range(1, len(ids))) AS t(i)
-    ) u(ai, bi)
-),
+_MINHASH_ORACLE = f"""
+WITH docs_dd AS ({DOCS_DD_SQL}),
+{_minhash_band_ctes("docs_dd")},
+{_capped_cand_cte("bands", "doc_id", ("j", "band_key"))},
 jac AS (
     SELECT ai, bi, {_JACCARD.format(a='ga.g', b='gb.g')} AS jaccard
     FROM cand JOIN grams ga ON ai = ga.doc_id JOIN grams gb ON bi = gb.doc_id
@@ -229,24 +264,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # signed BIGINT on both engines), 4 × 15-bit blocks for hamming ≤ 3.
 SIMHASH_BITS = 60
 _SIMHASH_ORACLE = f"""
-WITH docs_dd AS ({DOCS_DD_SQL}),
-words AS (
-    SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-    FROM docs_dd
-),
-tok AS (
-    SELECT doc_id, unnest(list_transform(w, t -> ('0x' || substr(md5(t), 1, {SIMHASH_BITS // 4}))::BIGINT)) AS h
-    FROM words
-),
-bits AS (
-    SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-    FROM tok CROSS JOIN (SELECT unnest(range(0, {SIMHASH_BITS})) AS b) _b
-    GROUP BY doc_id, b
-),
-sh AS (
-    SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS sh
-    FROM bits GROUP BY doc_id
-),
+{_simhash_ctes(SIMHASH_BITS)},
 blocks AS (
     SELECT doc_id, sh, j, (sh >> (j * 15)) & 32767 AS bv
     FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS j) _j
@@ -286,8 +304,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NGRAM_ORACLE = _GRAMS_CTE + f"""
-, q AS (
+_NGRAM_ORACLE = f"""
+WITH docs_dd AS ({DOCS_DD_SQL}),
+{_grams_ctes("docs_dd")},
+q AS (
     SELECT doc_id AS query_id, g AS qg FROM grams
     WHERE doc_id >= 2000000 AND doc_id <= 2000070
 ),
@@ -435,22 +455,7 @@ bands AS (
     SELECT vec_id, b AS band_id, substr(bits, CAST(b * 8 + 1 AS INT), 8) AS band_key
     FROM bitstr CROSS JOIN (SELECT unnest(range(0, 8)) AS b)
 ),
-bsz AS (SELECT band_id, band_key, count(*) AS n FROM bands GROUP BY band_id, band_key),
--- Same BUCKET_CAP rule as the Spark side (operators/dedup.py).
-cand AS (
-    SELECT DISTINCT ai, bi FROM (
-        SELECT a.vec_id AS ai, b.vec_id AS bi
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.vec_id < b.vec_id
-        JOIN bsz s ON s.band_id = a.band_id AND s.band_key = a.band_key
-        WHERE s.n <= {BUCKET_CAP}
-        UNION ALL
-        SELECT ids[i] AS ai, ids[i+1] AS bi
-        FROM (SELECT band_id, band_key, list(vec_id ORDER BY vec_id) AS ids
-              FROM bands GROUP BY band_id, band_key HAVING count(*) > {BUCKET_CAP}) ob,
-             unnest(range(1, len(ids))) AS t(i)
-    ) u(ai, bi)
-),
+{_capped_cand_cte("bands", "vec_id", ("band_id", "band_key"))},
 ver AS (
     SELECT ai, bi, list_sum(list_transform(ca.v, (x, i) -> x * cb.v[i])) AS sim
     FROM cand JOIN c ca ON ai = ca.vec_id JOIN c cb ON bi = cb.vec_id
@@ -472,13 +477,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hyperplane_lsh_pairs(_emb_dd(spark, sf_dir))
 
 
-def _groups_oracle() -> str:
-    # The minhash pair query, wrapped as a CTE, then a recursive transitive
-    # closure: group_id = least(self, min reachable id). WITH RECURSIVE is
-    # the DuckDB dual of the Spark driver-side label-propagation loop.
-    body = _MINHASH_ORACLE.strip()
+def _groups_oracle(pairs_sql: str) -> str:
+    # A (doc_id_a, doc_id_b) pair query, wrapped as a CTE, then a recursive
+    # transitive closure: group_id = least(self, min reachable id). WITH
+    # RECURSIVE is the DuckDB dual of the Spark star-contraction loop.
     return f"""
-WITH RECURSIVE pairs AS ({body}),
+WITH RECURSIVE pairs AS ({pairs_sql.strip()}),
 edges AS (
     SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
     UNION
@@ -517,7 +521,7 @@ def _neardup_groups_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_groups", _groups_oracle())
+@register("dedup_groups", _groups_oracle(_MINHASH_ORACLE))
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS: connected components (min-label propagation) over
     the MinHash-LSH pair output — pairwise dedup turned into actionable
@@ -590,40 +594,11 @@ FROM documents WHERE doc_id % 11 = 0
 """
 
 
-def _side_band_cte(rel: str, p: str) -> str:
-    """sig/band CTE chain for one side, prefixed `p`, over relation `rel`
-    with (doc_id, text) — mirrors operators/dedup.py's constants."""
-    band_key = " || ',' || ".join(
-        f"CAST(sig[j * {ROWS} + {i + 1}] AS VARCHAR)" for i in range(ROWS)
-    )
-    return f"""
-{p}_words AS (
-    SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
-    FROM {rel}
-),
-{p}_grams AS (
-    SELECT doc_id,
-           list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                          for i in range(1, len(w) - 1)]) AS g
-    FROM {p}_words WHERE len(w) >= 3
-),
-{p}_hs AS (
-    SELECT doc_id, g,
-           list_transform(g, x -> (('0x' || substr(md5(x), 1, 8))::BIGINT) % {P}) AS h
-    FROM {p}_grams
-),
-{p}_sigs AS (SELECT doc_id, g, {_SIG_DUCK} AS sig FROM {p}_hs),
-{p}_bands AS (
-    SELECT doc_id, j, {band_key} AS band_key
-    FROM {p}_sigs CROSS JOIN (SELECT unnest(range(0, {BANDS})) AS j) _j
-)"""
-
-
 _INC_ORACLE = f"""
 WITH base_rel AS (SELECT doc_id, text FROM documents),
 new_rel AS ({NEW_BATCH_SQL}),
-{_side_band_cte("base_rel", "b").lstrip()},
-{_side_band_cte("new_rel", "n").lstrip()},
+{_minhash_band_ctes("base_rel", "b_")},
+{_minhash_band_ctes("new_rel", "n_")},
 b_members AS (
     SELECT j, band_key, (list_sort(list(doc_id)))[1:{BUCKET_CAP}] AS ids
     FROM b_bands GROUP BY j, band_key
@@ -693,24 +668,7 @@ def _fuzzy_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FUZZY_GROUPS_ORACLE = f"""
-WITH RECURSIVE pairs AS ({fuzzy_edit_oracle_sql(EDIT_T).strip()}),
-edges AS (
-    SELECT doc_id_a AS src, doc_id_b AS dst FROM pairs
-    UNION
-    SELECT doc_id_b AS src, doc_id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-    SELECT src, dst FROM edges
-    UNION
-    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id, least(src, min(dst)) AS group_id
-FROM reach GROUP BY src
-"""
-
-
-@register("dedup_fuzzy_groups", _FUZZY_GROUPS_ORACLE)
+@register("dedup_fuzzy_groups", _groups_oracle(fuzzy_edit_oracle_sql(EDIT_T)))
 def dedup_fuzzy_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the edit-distance pairs — chains of
     single-word edits (A~B~C with dist(A,C) > t) collapse into one

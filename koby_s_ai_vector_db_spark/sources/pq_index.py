@@ -53,6 +53,7 @@ from koby_s_ai_vector_db_spark.operators.pq import (
     pq_distance_table,
     pq_encode,
 )
+from koby_s_ai_vector_db_spark.sources.tables import read_parquet_or_none
 
 DATA_SUBDIR = "data"
 CODEBOOK_SUBDIR = "codebook"
@@ -61,11 +62,9 @@ TOMBSTONES_SUBDIR = "tombstones"
 
 
 def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The deleted-id table, or None if nothing was ever deleted."""
-    try:
-        return spark.read.parquet(f"{path}/{TOMBSTONES_SUBDIR}")
-    except Exception:
-        return None
+    """The deleted-id table, or None if nothing was ever deleted. An
+    unreadable tombstone table raises (sources/tables.py)."""
+    return read_parquet_or_none(spark, f"{path}/{TOMBSTONES_SUBDIR}")
 
 
 def _read_data(spark: SparkSession, path: str, corpus_id: str) -> DataFrame:

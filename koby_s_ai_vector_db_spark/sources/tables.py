@@ -44,6 +44,23 @@ NOW_TS = "2024-01-25 12:00:00"
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """`spark.read.parquet(path)`, or None when `path` does not exist.
+
+    Only Spark's PATH_NOT_FOUND condition means "absent"; every other
+    failure (a corrupt footer, an unreadable directory) raises. For an
+    index's tombstone table, reading "nothing deleted" out of an
+    unreadable directory would put deleted rows back into results."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet → pushdown/pruning-capable scan.
 

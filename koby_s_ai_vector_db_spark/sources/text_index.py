@@ -43,6 +43,7 @@ from koby_s_ai_vector_db_spark.operators.corpus import (
     term_postings,
 )
 from koby_s_ai_vector_db_spark.operators.dedup import words_expr
+from koby_s_ai_vector_db_spark.sources.tables import read_parquet_or_none
 
 POSTINGS_SUBDIR = "postings"
 TERMS_SUBDIR = "terms"
@@ -55,11 +56,9 @@ def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     """The (id, up_to_seg) table of deletions, or None if nothing was
     ever deleted (the subdir only exists after a delete). A row hides an
     id's postings in generations <= up_to_seg — generations written
-    AFTER the delete (an upsert's re-add) are visible again."""
-    try:
-        return spark.read.parquet(f"{path}/{TOMBSTONES_SUBDIR}")
-    except Exception:
-        return None
+    AFTER the delete (an upsert's re-add) are visible again. An
+    unreadable tombstone table raises (sources/tables.py)."""
+    return read_parquet_or_none(spark, f"{path}/{TOMBSTONES_SUBDIR}")
 
 
 def _live(postings: DataFrame, tomb: DataFrame | None) -> DataFrame:

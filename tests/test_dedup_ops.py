@@ -99,32 +99,6 @@ def test_simhash60_finds_exact_copy_and_rejects_bad_bits(spark):
         simhash_near_dup_pairs(docs, bits=58)  # no valid block split
 
 
-def test_simhash_rep_pairs_fallback_scheme_equals_bruteforce(spark):
-    """_simhash_rep_pairs uses single-clean-block keying when
-    (max_hamming + 2) does not divide bits (e.g. bits=32, max_hamming=3:
-    32 % 5 != 0, 32 % 4 == 0) — the fallback must still emit exactly the
-    hamming<=max_hamming sketch pairs (sha <= shb, diagonal included).
-    The primary pair-of-blocks scheme is covered at bits=60 by
-    tests/test_properties.py::test_simhash_blocked_pairs_equal_bruteforce."""
-    from koby_s_ai_vector_db_spark.operators.dedup import _simhash_rep_pairs
-
-    shs = [0b1011, 0b1010, 0b1011 | (1 << 20) | (1 << 30), 0, 1 << 31]
-    sigs = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(shs)], "_id long, sh long"
-    )
-    expected = sorted(
-        (min(a, b), max(a, b), bin(a ^ b).count("1"))
-        for i, a in enumerate(shs)
-        for b in shs[i:]
-        if bin(a ^ b).count("1") <= 3
-    )
-    got = sorted(
-        (r.sha, r.shb, r.hamming)
-        for r in _simhash_rep_pairs(sigs, 3, 32).collect()
-    )
-    assert got == expected
-
-
 def test_simhash_table_equals_hof_expr(spark):
     """simhash_table (codegen explode+vote-sum form) must produce the
     exact sketch simhash_expr (HOF aggregate form) produces for every

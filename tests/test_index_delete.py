@@ -258,3 +258,57 @@ class TestTextIndexUpsert:
         assert _rows(search_text_index(spark, path, queries)) == _rows(
             search_text_index(spark, fresh, queries)
         )
+
+
+def _corrupt_tombstones(path):
+    """Overwrite every tombstone data file with bytes that are not parquet
+    (checksum sidecars removed, so the read reaches the footer)."""
+    import os
+
+    for root, _dirs, files in os.walk(f"{path}/tombstones"):
+        for f in files:
+            full = os.path.join(root, f)
+            if f.endswith(".crc"):
+                os.remove(full)
+            elif f.endswith(".parquet"):
+                with open(full, "wb") as fh:
+                    fh.write(b"not a parquet file")
+
+
+def test_corrupt_tombstones_raise_instead_of_resurrecting(spark, tmp_path):
+    """An unreadable tombstone table must fail the search, never read as
+    "nothing deleted" — that would return deleted ids as live hits."""
+    import pytest
+
+    from koby_s_ai_vector_db_spark.sources.pq_index import (
+        build_ivfpq_index,
+        delete_from_index,
+        ivfpq_index_search,
+    )
+    from koby_s_ai_vector_db_spark.sources.text_index import (
+        build_text_index,
+        delete_from_text_index,
+        search_text_index,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents")
+    text = str(tmp_path / "text")
+    build_text_index(docs, text)
+    doomed = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
+    assert delete_from_text_index(spark, text, doomed)["n_deleted"] > 0
+    _corrupt_tombstones(text)
+    queries = spark.createDataFrame(QUERIES, "query_id bigint, query_text string")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        search_text_index(spark, text, queries).collect()
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    pq = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, pq, list_col="label")
+    doomed = spark.createDataFrame([(i,) for i in range(4)], "vec_id bigint")
+    assert delete_from_index(spark, pq, doomed)["n_deleted"] == 4
+    _corrupt_tombstones(pq)
+    vq = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    with pytest.raises(Exception, match="not a Parquet file"):
+        ivfpq_index_search(spark, pq, vq).collect()

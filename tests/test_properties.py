@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -253,21 +254,27 @@ def test_norm_text_expr_idempotent(spark, texts_):
 
 
 # --- simhash blocking completeness --------------------------------------------
-# The claim simhash_near_dup_pairs rests on (operators/dedup.py): splitting a
-# ``bits``-bit signature into (max_hamming + 1) equal blocks loses NOTHING —
-# any pair within Hamming distance max_hamming agrees on at least one whole
-# block (pigeonhole), so the blocked output must EQUAL the all-pairs brute
-# force over the same signature table, not merely approximate it. Random
-# corpora alone almost never produce near-dups, so the strategy plants
-# exact copies and small token edits on top of random narrow-vocab docs;
-# the equality is asserted either way (empty result sets must also agree).
+# The claim simhash_near_dup_pairs rests on (operators/dedup.py): blocking a
+# ``bits``-bit signature loses NOTHING — any pair within Hamming distance
+# max_hamming agrees on a clean block pair (max_hamming + 2 blocks) or, when
+# that split does not divide ``bits``, on a single clean block (max_hamming
+# + 1 blocks) — so the blocked output must EQUAL the all-pairs brute force
+# over the same signature table, not merely approximate it. bits=60 runs the
+# pair-of-blocks scheme at every max_hamming; bits=32 runs the single-block
+# fallback at max_hamming 1 and 3. Random corpora alone almost never produce
+# near-dups, so the strategy plants exact copies and small token edits on
+# top of random narrow-vocab docs; the equality is asserted either way
+# (empty result sets must also agree).
+@pytest.mark.parametrize("bits", [32, 60])
 @settings(max_examples=10, deadline=None)
 @given(
     data=st.data(),
     n_docs=st.integers(2, 10),
     max_hamming=st.sampled_from([1, 2, 3]),
 )
-def test_simhash_blocked_pairs_equal_bruteforce(spark, data, n_docs, max_hamming):
+def test_simhash_blocked_pairs_equal_bruteforce(
+    spark, bits, data, n_docs, max_hamming
+):
     from koby_s_ai_vector_db_spark.operators.dedup import (
         simhash_near_dup_pairs,
         simhash_table,
@@ -292,7 +299,7 @@ def test_simhash_blocked_pairs_equal_bruteforce(spark, data, n_docs, max_hamming
     df = spark.createDataFrame(docs, "doc_id long, text string")
     sigs = {
         r._id: r.sh
-        for r in simhash_table(df, "doc_id", "text", bits=60).collect()
+        for r in simhash_table(df, "doc_id", "text", bits=bits).collect()
     }
     expected = sorted(
         (a, b, bin(sigs[a] ^ sigs[b]).count("1"))
@@ -303,7 +310,66 @@ def test_simhash_blocked_pairs_equal_bruteforce(spark, data, n_docs, max_hamming
     got = sorted(
         (r.doc_id_a, r.doc_id_b, r.hamming)
         for r in simhash_near_dup_pairs(
-            df, "doc_id", "text", max_hamming=max_hamming, bits=60
+            df, "doc_id", "text", max_hamming=max_hamming, bits=bits
         ).collect()
     )
     assert got == expected
+
+
+# --- LSH bucket candidates: brute force and cross-engine ---------------------
+# bucket_candidates is the one candidate-pair primitive of the MinHash and
+# hyperplane tiers, and _capped_cand_cte its DuckDB twin inside every such
+# oracle. Random band tables with a small key alphabet and a small cap
+# produce both regimes: buckets within the cap (all co-bucketed pairs) and
+# over-cap buckets (the sorted consecutive chain). Each id holds one key per
+# band, as posexplode over a signature produces.
+@settings(max_examples=15, deadline=None)
+@given(
+    data=st.data(),
+    n_ids=st.integers(2, 14),
+    n_bands=st.integers(1, 3),
+    n_keys=st.integers(1, 3),
+    cap=st.integers(2, 4),
+)
+def test_bucket_candidates_equal_bruteforce_and_oracle(
+    spark, duck, data, n_ids, n_bands, n_keys, cap
+):
+    from koby_s_ai_vector_db_spark.operators.dedup import bucket_candidates
+    from koby_s_ai_vector_db_spark.queries.dedup_q import _capped_cand_cte
+
+    ids = data.draw(
+        st.lists(st.integers(0, 10_000), min_size=n_ids, max_size=n_ids, unique=True)
+    )
+    rows = [
+        (i, b, f"k{data.draw(st.integers(0, n_keys - 1))}")
+        for i in ids
+        for b in range(n_bands)
+    ]
+    buckets: dict = {}
+    for i, b, k in rows:
+        buckets.setdefault((b, k), []).append(i)
+    expected = set()
+    for members in buckets.values():
+        m = sorted(members)
+        if len(m) <= cap:
+            expected |= {(a, c) for x, a in enumerate(m) for c in m[x + 1:]}
+        else:
+            expected |= set(zip(m, m[1:]))
+
+    bands = spark.createDataFrame(rows, "_id long, band_id int, band_key string")
+    got = [(r.ai, r.bi) for r in bucket_candidates(bands, cap).collect()]
+    assert len(got) == len(set(got))  # distinct
+    assert set(got) == expected
+
+    import pandas as pd
+
+    duck.register(
+        "prop_bands", pd.DataFrame(rows, columns=["_id", "band_id", "band_key"])
+    )
+    try:
+        cte = _capped_cand_cte("prop_bands", "_id", ("band_id", "band_key"), cap)
+        oracle = duck.execute(f"WITH {cte} SELECT ai, bi FROM cand").fetchall()
+    finally:
+        duck.unregister("prop_bands")
+    assert len(oracle) == len(set(oracle))
+    assert set(oracle) == expected

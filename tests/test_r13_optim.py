@@ -74,6 +74,25 @@ def test_evict_application_clears_width_memo(spark):
         _WIDTH_MEMO.pop(("other-app", 12345), None)
 
 
+def test_input_sized_partitions_reads_file_uris_and_never_falls_to_one(spark):
+    """`file:` URIs (what DataFrame.inputFiles() returns) count the same
+    bytes as bare paths, and an input with no measurable bytes gets the
+    session's shuffle width, not a single partition."""
+    from koby_s_ai_vector_db_spark.functions.partitioning import (
+        input_sized_partitions,
+    )
+
+    bare = [f"{SF_DIR}/lineitem.parquet", f"{SF_DIR}/orders.parquet"]
+    n = input_sized_partitions(bare, bytes_per_partition=4096)
+    assert n > 1
+    assert input_sized_partitions(
+        [f"file:{p}" for p in bare], bytes_per_partition=4096
+    ) == n
+    assert input_sized_partitions([f"{SF_DIR}/no_such_table.parquet"]) == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+
 def test_gopher_top_frac_fold_equals_brute(spark):
     """The sorted-run fold must equal the old O(n·distinct) counting
     expression on adversarial token layouts (ties, singletons, runs at
